@@ -5,7 +5,7 @@
 # round with tools/ScaleUp (scripts/scaleup_r17.sh).
 set -e
 cd /root/repo
-export SPARK_GRAFT_CPUS=32
+export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_BENCH_FILE=/root/repo/BENCH_r17_sf01_evidence.json \
   sbt -batch "runMain graft.Bench" 2>&1 | grep '"metric"' | tail -1
 SPARK_GRAFT_SF_DIR=/root/repo/scale/x10 SPARK_GRAFT_BENCH_FILE=/root/repo/BENCH_r17_x10.json \

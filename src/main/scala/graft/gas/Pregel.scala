@@ -8,8 +8,10 @@ import org.apache.spark.sql.DataFrame
   * program is one `superstep` function over DataFrames).
   *
   * A superstep maps (state, edges, iteration) → next state; the loop
-  * localCheckpoints each state (lineage truncation — reliable
-  * checkpoints on a cluster) and stops when a superstep is a no-op.
+  * localCheckpoints each state (lineage truncation only: the blocks
+  * live in executor storage, so losing an executor loses the state —
+  * these are not reliable checkpoints) and stops when a superstep is a
+  * no-op.
   * The shipped algorithms in [[Analytics]] keep their hand-tuned
   * delta-frontier loops (they can detect convergence from the frontier
   * for free); this generic runner pays one exceptAll per superstep for

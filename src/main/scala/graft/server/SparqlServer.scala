@@ -2,13 +2,15 @@ package graft.server
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.Graft
-import graft.rdf.{QuadStore, Repository, Serializer}
-import graft.sparql.{Algebra, Ask, Parser, Update}
+import graft.rdf.{Journal, QuadStore, Repository, Serializer}
+import graft.sparql.{Algebra, Ask, Parser, SolutionsOp, Update, UpdateOp}
 import java.net.InetSocketAddress
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.{ConcurrentHashMap, Executors}
-import java.util.concurrent.atomic.AtomicReference
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Executors}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{col, lit}
 import scala.jdk.CollectionConverters._
 
 /** SPARQL 1.1 Protocol endpoint + REST management plane over
@@ -38,8 +40,11 @@ import scala.jdk.CollectionConverters._
   *     `application/rdf+xml`, `application/ld+json`,
   *     `application/n-quads`, `application/trig`; optional
   *     `context-uri=` (or `graph=`) targets a named graph. Returns the
-  *     reference's `<data modified="N"/>` document. An unsupported
-  *     content type is a loud 415, never a silent parse-as-query.
+  *     reference's `<data modified="N"/>` document, where N counts the
+  *     statements actually added or removed — a re-insert, or the
+  *     removal of an absent statement, counts 0 on every namespace
+  *     kind. An unsupported content type is a loud 415, never a silent
+  *     parse-as-query.
   *   - `DELETE /sparql?query=<CONSTRUCT…>` removes the construction's
   *     statements (every graph they appear in);
   *     `DELETE /sparql` with an RDF body removes those statements.
@@ -70,14 +75,18 @@ import scala.jdk.CollectionConverters._
   *     (`kb`) PER REQUEST, so they can never diverge from
   *     `/namespace/kb/sparql`.
   *
-  * DURABILITY: constructed over a journal directory
-  * ([[SparqlServer.durable]]), every namespace is a [[Repository]] —
-  * updates commit their op-shaped delta through the journal
-  * ([[Repository.update]]), ingest lands as insert-only commits, and a
-  * server restart reattaches every namespace from disk (the
-  * reference's namespaces are journal-backed the same way). The
-  * in-memory constructor keeps the old ephemeral behavior for tests
-  * and scratch serving.
+  * DURABILITY: every namespace is one tenant over one of three commit
+  * sinks, as the reference sends every write through one sail
+  * connection whatever backs it. The in-memory constructor swaps
+  * handles (tests and scratch serving); over a journal directory
+  * ([[SparqlServer.durable]]) a namespace commits to a [[Repository]]
+  * journal, or — created with `truthMaintenance=true` — to a
+  * truth-maintained closure, and a server restart reattaches every
+  * namespace from disk. All three share one write path: a
+  * per-namespace write lock, each request's `(adds, dels)` delta
+  * committed as ONE version, one modified-count rule, and one
+  * per-version head cache whose superseded views are released once
+  * no request of the namespace is in flight.
   *
   * [[graft.sparql.RemoteService]] speaks this protocol back, so two
   * graft clusters federate over SERVICE with no extra glue, and
@@ -97,313 +106,121 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
 
   // ---- tenants ----------------------------------------------------
 
-  /** One namespace's store operations — memory- or journal-backed. */
-  private sealed trait Tenant {
-    def current: Graft
-    def update(text: String): Unit =
-      updateOps(graft.sparql.Parser.parseUpdates(text))
-    /** Apply already-parsed update ops — the protocol dataset knobs
-      * (using-graph-uri) rewrite the ops before application. */
-    def updateOps(ops: Seq[graft.sparql.UpdateOp]): Unit
-    /** Insert parsed quads; returns the statement count ingested. */
-    def ingest(quads: DataFrame): Long
-    /** Remove every graph's occurrence of the (s,p,o) rows; returns
-      * the quad count removed. */
-    def remove(spo: DataFrame): Long
-    /** Remove exactly these (s,p,o,g) quads — the DELETE-by-access-
-      * path arm (graph-scoped, unlike [[remove]]'s every-graph
-      * contract); returns the quad count removed. */
-    def removeQuads(quads: DataFrame): Long
-    def removeQuadsSuppressed(quads: DataFrame): Long = removeQuads(quads)
-    // `suppressTruthMaintenance=true` variants (the reference's update
-    // servlets all accept the knob — QueryServlet.java:132,
-    // DeleteServlet.java:128): identical to the plain ops on non-TM
-    // tenants, verbatim commits (no closure maintenance) on TmTenant
-    def updateOpsSuppressed(ops: Seq[graft.sparql.UpdateOp]): Unit = updateOps(ops)
-    def ingestSuppressed(quads: DataFrame): Long = ingest(quads)
-    def removeSuppressed(spo: DataFrame): Long = remove(spo)
-    /** The ASSERTED-statements view — `includeInferred=false`
-      * (QueryServlet.java:140, default true; honored by query/
-      * HASSTMT/GETSTMTS): identical to [[current]] on non-TM tenants,
-      * the base (un-entailed) store on a truth-maintenance tenant. */
-    def asserted: Graft = current
-    def assertedAt(version: Long): Graft = at(version)
-    /** ATOMIC remove+insert — the reference's UPDATE-with-query /
-      * UPDATE-with-body servlets (UpdateServlet.java:90,817): remove
-      * every graph's occurrence of `removeSpo`, insert `adds`, as ONE
-      * operation; returns removed + inserted. */
-    def updateWithBody(removeSpo: DataFrame, adds: DataFrame,
-                       suppress: Boolean): Long
-    /** Read-only connection against a historical commit point — the
-      * protocol's `?timestamp=` knob (TxServlet's read-only tx
-      * analog); durable namespaces only. */
-    def at(version: Long): Graft =
-      sys.error("timestamp reads need a journal-backed namespace")
-    /** Journal head version (-1 for in-memory tenants). */
-    def version: Long = -1L
-    /** The backing journal, when durable — put in dynamic scope
-      * around query compilation so `SERVICE bd:history` serves THIS
-      * namespace's commit log. */
-    def journal: Option[graft.rdf.Journal] = None
-    /** Graph Store Protocol PUT: replace graph `g` with `quads`. */
-    def putGraph(g: String, quads: DataFrame): Unit
-    /** Graph Store Protocol DELETE: drop graph `g`. */
-    def dropGraph(g: String): Unit
-    /** Mass-load server-visible files/globs as ONE commit (the
-      * DataLoaderServlet analog); returns (version, statements). */
-    def bulkLoad(paths: Seq[String], graph: Option[String],
-                 compact: Boolean): (Long, Long) = {
-      val quads = paths
-        .map(p => Update.loadOpQuads(spark, p, graph, current.defaultGraph))
-        .reduce(_ unionAll _)
-      (-1L, ingest(quads))
-    }
-    /** Metadata-only ESTCARD: Some(n) when the count is answerable
-      * from parquet footers (durable + fully compacted head), None →
-      * caller falls back to an exact count job. */
-    def metadataCount(graph: Option[String]): Option[Long] = None
-    /** Atomically apply a staged tx's items (update texts + parsed
-      * quad batches) as one commit; `expectVersion` is the journal
-      * version at tx creation — a head that moved since is a CONFLICT
-      * (first-committer-wins, whole-store granularity). */
-    def commitStaged(items: Seq[Either[String, DataFrame]],
-                     expectVersion: Long): Long
-    /** PREPARE-TX (TxServlet.java:84): run the SAME validation
-      * [[commitStaged]] applies, committing nothing — throws
-      * TxConflict exactly when a commit now would. Advisory (no lock
-      * is taken between prepare and commit). */
-    def prepareStaged(items: Seq[Either[String, DataFrame]],
-                      expectVersion: Long): Unit
-    /** Online backup: snapshot the namespace's journal to a
-      * server-visible directory while holding the write lock
-      * (quiesced); durable namespaces only. Returns the backed-up
-      * version. */
-    def backup(target: Path): Long =
-      sys.error("backup needs a journal-backed namespace")
-    def destroy(): Unit
-  }
+  private val Quad = Seq("s", "p", "o", "g")
+  private val Spo = Seq("s", "p", "o")
+  private val DefaultGraph = "g:default"
+  /** A staged tx item: a parsed update request or a parsed quad batch. */
+  private type Staged = Either[Seq[UpdateOp], DataFrame]
 
   private def emptyQuads: DataFrame =
     Seq.empty[(String, String, String, String)].toDF("s", "p", "o", "g")
 
-  private final class MemTenant(ref: AtomicReference[Graft]) extends Tenant {
-    def current: Graft = ref.get()
-    def updateOps(ops: Seq[graft.sparql.UpdateOp]): Unit = {
-      ref.updateAndGet(_.updateOps(ops)); ()
-    }
-    // every mutation routes through withStore: a handle seeded from a
-    // twin/index-bearing connection must not keep serving the
-    // committed-version accelerators over mutated in-memory state
-    def ingest(quads: DataFrame): Long = {
-      val q = quads.localCheckpoint()
-      ref.updateAndGet(g => g.withStore(g.store.insertQuads(q)))
-      q.count()
-    }
-    def remove(spo: DataFrame): Long = {
-      val keys = Seq("s", "p", "o")
-      val doomed = ref.get().store.quads
-        .join(spo.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(),
-          keys, "left_semi")
-        .localCheckpoint()
-      ref.updateAndGet(g => g.withStore(
-        QuadStore(g.store.quads.join(doomed, Seq("s", "p", "o", "g"), "left_anti"))))
-      doomed.count()
-    }
-    def removeQuads(quads: DataFrame): Long = {
-      val doomed = ref.get().store.quads
-        .join(quads.select("s", "p", "o", "g").distinct(),
-          Seq("s", "p", "o", "g"), "left_semi")
-        .localCheckpoint()
-      ref.updateAndGet(g => g.withStore(
-        QuadStore(g.store.quads.join(doomed, Seq("s", "p", "o", "g"), "left_anti"))))
-      doomed.count()
-    }
-    def updateWithBody(removeSpo: DataFrame, adds: DataFrame,
-                       suppress: Boolean): Long = {
-      val keys = Seq("s", "p", "o")
-      val doomed = ref.get().store.quads
-        .join(removeSpo.select(keys.map(org.apache.spark.sql.functions.col): _*)
-          .distinct(), keys, "left_semi")
-        .localCheckpoint()
-      val a = adds.localCheckpoint()
-      ref.updateAndGet(g => g.withStore(QuadStore(
-        g.store.quads.join(doomed, Seq("s", "p", "o", "g"), "left_anti"))
-        .insertQuads(a)))
-      doomed.count() + a.count()
-    }
-    def putGraph(g: String, quads: DataFrame): Unit = {
-      val q = quads.localCheckpoint()
-      ref.updateAndGet(h => h.withStore(h.store.dropGraph(g).insertQuads(q)))
-      ()
-    }
-    def dropGraph(g: String): Unit = {
-      ref.updateAndGet(h => h.withStore(h.store.dropGraph(g)))
-      ()
-    }
-    def commitStaged(items: Seq[Either[String, DataFrame]],
-                     expectVersion: Long): Long = {
-      // in-memory tenants have no commit log to conflict against; the
-      // updateAndGet applies the whole staged sequence atomically
-      ref.updateAndGet(g0 => items.foldLeft(g0) {
-        case (h, Left(text)) => h.update(text)
-        case (h, Right(df))  => h.withStore(h.store.insertQuads(df))
-      })
-      -1L
-    }
-    def prepareStaged(items: Seq[Either[String, DataFrame]],
-                      expectVersion: Long): Unit = ()
-    def destroy(): Unit = ()
+  /** Where one namespace's versions live: an in-memory handle
+    * ([[MemSink]]), a [[Repository]] journal ([[JournalSink]]) or a
+    * truth-maintained closure ([[TmSink]]). A sink reads its head,
+    * commits one `(adds, dels)` delta as one version, compacts when
+    * due and backs up. It also keeps what really differs between the
+    * kinds: staged-tx validation, bulk load, footer counts, the
+    * triples-mode refusals and in-memory solution sets. The rest of a
+    * namespace is [[Tenant]]'s, written once for all three. */
+  private sealed abstract class Sink(val kind: String) {
+    /** Head version — the key of the tenant's head cache. */
+    def version: Long
+    /** A fresh connection on the head. */
+    def head: Graft
+    /** A read-only connection on commit point `v` — the protocol's
+      * `?timestamp=` knob (TxServlet's read-only tx analog). */
+    def at(v: Long): Graft =
+      sys.error("timestamp reads need a journal-backed namespace")
+    /** The asserted statements at `v` (-1 = head) where queries see
+      * more than was asserted (truth maintenance); None elsewhere. */
+    def asserted(v: Long): Option[Graft] = None
+    /** Commit `dels` then `adds` as ONE version; `suppress` commits
+      * verbatim on a truth-maintained sink and means nothing elsewhere. */
+    def commit(adds: DataFrame, dels: DataFrame, suppress: Boolean): Unit
+    def compactDue: Boolean = false
+    def compact(): Unit = ()
+    /** The journal `SERVICE bd:history` serves. */
+    def history: Option[Journal] = None
+    /** The journal a persisted text index follows. */
+    def indexed: Option[Journal] = history
+    /** A request's quads as this sink holds them. */
+    def local(quads: DataFrame): DataFrame = quads
+    /** Refuse a graph this sink cannot hold. */
+    def requireGraph(g: String): Unit = ()
+    /** Apply `ops` to the in-memory handle itself; false = the caller
+      * commits their delta. */
+    def onHandle(ops: Seq[UpdateOp]): Boolean = false
+    /** A bulk load the sink appends itself: Some((version, statements)). */
+    def bulkAppend(paths: Seq[String], graph: Option[String],
+                   compact: Boolean): Option[(Long, Long)] = None
+    /** Metadata-only ESTCARD: Some(n) when parquet footers answer it. */
+    def metadataCount(graph: Option[String]): Option[Long] = None
+    /** PREPARE-TX (TxServlet.java:84): the validation [[commitStaged]]
+      * runs, committing nothing — throws [[TxConflict]] exactly when a
+      * commit now would. `expect` is the version at tx creation. */
+    def prepareStaged(items: Seq[Staged], expect: Long, head: Graft): Unit = ()
+    def commitStaged(items: Seq[Staged], expect: Long, head: Graft): Unit
+    def backup(target: Path): Unit =
+      sys.error("backup needs a journal-backed namespace")
   }
 
-  /** Journal-backed namespace: reads serve a per-version cached
-    * connection (so the union-default-graph merge view materializes
-    * once per COMMIT, not once per request), writes commit through the
-    * repository's delta path. Every `autoCompactEvery` commits the
+  /** In-memory namespace: a commit swaps in the next handle. */
+  private final class MemSink(initial: Graft) extends Sink("memory") {
+    @volatile private var g = initial
+    @volatile private var v = 0L
+    def version: Long = v
+    def head: Graft = g
+    private def swap(next: Graft): Unit = { g = next; v += 1 }
+    // the next handle's plan must not re-run this delta's WHERE (k
+    // stacked writes would nest the store plan 2^k times) or re-read a
+    // dropped request spill file — checkpoint it, once
+    private def pinned(df: DataFrame): DataFrame =
+      if (df.queryExecution.logical.isInstanceOf[LogicalRDD]) df else df.localCheckpoint()
+    def commit(adds: DataFrame, dels: DataFrame, suppress: Boolean): Unit =
+      swap(g.withStore(QuadStore(g.store.quads.join(pinned(dels), Quad, "left_anti"))
+        .insertQuads(pinned(adds))))
+    // named solution sets live on the handle (Graft.applyOne): a
+    // request holding a SOLUTIONS op, or one made while sets exist (a
+    // CLEAR ALL clears them too), applies to the handle itself
+    override def onHandle(ops: Seq[UpdateOp]): Boolean =
+      (g.solutionSets.nonEmpty || ops.exists(_.isInstanceOf[SolutionsOp])) &&
+        { swap(g.updateOps(ops)); true }
+    // no commit log to conflict against: the staged sequence applies
+    // to the handle in one swap
+    def commitStaged(items: Seq[Staged], expect: Long, head: Graft): Unit =
+      swap(items.foldLeft(g) {
+        case (h, Left(ops)) => h.updateOps(ops)
+        case (h, Right(df)) => h.withStore(h.store.insertQuads(df))
+      })
+  }
+
+  /** Journal-backed namespace. Every `autoCompactEvery` commits the
     * journal compacts itself — a server-managed store must keep its
     * own snapshot-resolution cost bounded (the reference's journal
     * likewise compacts on its own overflow schedule), or a year of
     * small REST updates degrades every read into an
     * O(delta-count)-input resolution. */
-  private final class DurableTenant(repo: Repository, dir: Path) extends Tenant {
-    @volatile private var cached: (Long, Graft) = (-1L, null)
-    // per-namespace analyzer config, persisted beside the journal
-    // (ConfigurableAnalyzerFactory stores it in namespace properties);
-    // read once at attach — restart reattaches it with the namespace
-    private val analyzerConf: Option[String] = {
-      val f = dir.resolve("analyzer.conf")
-      if (Files.exists(f)) Some(Files.readString(f).trim).filter(_.nonEmpty) else None
+  private final class JournalSink(repo: Repository, dir: Path) extends Sink("journal") {
+    def version: Long = repo.version
+    def head: Graft = repo.connection()
+    override def at(v: Long): Graft = repo.connection(v)
+    def commit(adds: DataFrame, dels: DataFrame, suppress: Boolean): Unit = {
+      repo.journal.commit(adds, dels); ()
     }
-    private def withConf(g: Graft): Graft =
-      if (analyzerConf.isDefined) g.copy(analyzerName = analyzerConf) else g
-    // namespace-owned persisted literal text index (created by the
-    // namespace POST's textIndex=true): reattached with the namespace
-    // and synced at attach — a crash between a journal commit and its
-    // index sync heals here, the MaintainedClosure recovery discipline
-    private val textIx: Option[graft.search.PersistedSearchIndex] = {
-      val d = dir.resolve("textindex")
-      if (graft.search.PersistedSearchIndex.exists(d.toString)) {
-        val ix = graft.search.PersistedSearchIndex.open(spark, d.toString)
-        graft.rdf.TextIndexMaintenance.sync(ix, repo.journal)
-        Some(ix)
-      } else None
-    }
-    /** Attach the index view to a HEAD connection — only when current
-      * to the head version (a stale index must not serve hits for
-      * literals that were since removed); historical `at()` reads
-      * never attach it. */
-    private def withIx(g: Graft): Graft = textIx match {
-      case Some(ix) if ix.version == repo.version => g.copy(textIndex = Some(ix.view))
-      case _ => g
-    }
-    def current: Graft = {
-      val v = repo.version
-      val c = cached
-      if (c._1 == v && c._2 != null) c._2
-      else synchronized {
-        if (cached._1 != v || cached._2 == null)
-          cached = (v, withIx(withConf(repo.connection())))
-        cached._2
-      }
-    }
+    override def compactDue: Boolean =
+      repo.version - repo.journal.lastCompacted >= autoCompactEvery
     // ospIndex=true namespaces lay down the object-hash twin on every
     // compaction — searchInSearch hit joins then prune out of the box
-    private val ospIndex: Boolean = Files.exists(dir.resolve("ospindex"))
-    private def maybeCompact(): Unit = synchronized {
-      // every write path runs through here; the journal compaction (if
-      // due) happens FIRST, so the text-index sync lands on the
-      // post-compaction head version — syncing before it would leave
-      // ix.version one behind repo.version and withIx would silently
-      // detach the index until the next write (the compaction commit
-      // itself is skipped by changedQuads, so the sync stays
-      // delta-sized either way)
-      val compacting =
-        repo.version - repo.journal.lastCompacted >= autoCompactEvery
-      if (compacting) repo.compact(ospHashTwin = ospIndex)
-      // the index (if any) catches up to the head (delta-sized batch),
-      // so the next `current` serves index-backed search over the new
-      // commit
-      textIx.foreach { ix =>
-        graft.rdf.TextIndexMaintenance.sync(ix, repo.journal)
-        // the journal's compaction moment is the index's too: collapse
-        // its segment log so steady-state search reads ONE postings
-        // scan. Reclaim discipline: vacuum FIRST — it deletes only
-        // files the CURRENT manifest no longer references, i.e. the
-        // generation superseded by the PREVIOUS compaction, giving
-        // in-flight readers a full compaction cycle of grace — then
-        // compact, whose freshly superseded files stay until the NEXT
-        // cycle. Without the vacuum the server leaks a full postings
-        // copy per compaction (disk grows O(cycles × index)).
-        if (compacting) { ix.vacuum(); ix.compact() }
-      }
+    override def compact(): Unit = {
+      repo.compact(ospHashTwin = Files.exists(dir.resolve("ospindex"))); ()
     }
-    // writes serialize per namespace (the reference's single-writer
-    // journal lock): two concurrent REST updates queue instead of one
-    // failing loud on the journal's version race
-    def updateOps(ops: Seq[graft.sparql.UpdateOp]): Unit =
-      synchronized { repo.updateOps(ops); maybeCompact() }
-    override def at(version: Long): Graft = withConf(repo.connection(version))
-    override def version: Long = repo.version
-    override def journal: Option[graft.rdf.Journal] = Some(repo.journal)
-    def ingest(quads: DataFrame): Long = synchronized {
-      val q = quads.localCheckpoint()
-      repo.journal.commit(adds = q, dels = emptyQuads)
-      maybeCompact()
-      q.count()
-    }
-    def remove(spo: DataFrame): Long = synchronized {
-      val keys = Seq("s", "p", "o")
-      val doomed = current.store.quads
-        .join(spo.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(),
-          keys, "left_semi")
-        .localCheckpoint()
-      repo.journal.commit(adds = emptyQuads, dels = doomed)
-      maybeCompact()
-      doomed.count()
-    }
-    def removeQuads(quads: DataFrame): Long = synchronized {
-      val doomed = current.store.quads
-        .join(quads.select("s", "p", "o", "g").distinct(),
-          Seq("s", "p", "o", "g"), "left_semi")
-        .localCheckpoint()
-      repo.journal.commit(adds = emptyQuads, dels = doomed)
-      maybeCompact()
-      doomed.count()
-    }
-    def updateWithBody(removeSpo: DataFrame, adds: DataFrame,
-                       suppress: Boolean): Long = synchronized {
-      val keys = Seq("s", "p", "o")
-      val doomed = current.store.quads
-        .join(removeSpo.select(keys.map(org.apache.spark.sql.functions.col): _*)
-          .distinct(), keys, "left_semi")
-        .localCheckpoint()
-      val a = adds.localCheckpoint()
-      repo.journal.commit(adds = a, dels = doomed)
-      maybeCompact()
-      doomed.count() + a.count()
-    }
-    def putGraph(g: String, quads: DataFrame): Unit = synchronized {
-      import org.apache.spark.sql.functions.{col, lit}
-      val old = current.store.quads.filter(col("g") === lit(g))
-      repo.journal.commit(adds = quads.localCheckpoint(), dels = old)
-      maybeCompact()
-    }
-    def dropGraph(g: String): Unit = synchronized {
-      import org.apache.spark.sql.functions.{col, lit}
-      val old = current.store.quads.filter(col("g") === lit(g))
-      repo.journal.commit(adds = emptyQuads, dels = old)
-      maybeCompact()
-    }
-    override def bulkLoad(paths: Seq[String], graph: Option[String],
-                          compact: Boolean): (Long, Long) = synchronized {
-      // drives THIS tenant's journal handle — no second handle on the
-      // directory; single-pass (appendRaw + footer count) by design
-      val r = graft.rdf.BulkLoad.runWith(spark, repo.journal, paths, graph, compact)
-      // run even when the load already compacted: maybeCompact is also
-      // the text-index sync point, and an explicitly-compacted journal
-      // skips the inner compact anyway
-      maybeCompact()
-      r
-    }
+    override def history: Option[Journal] = Some(repo.journal)
+    // drives THIS namespace's journal handle — no second handle on the
+    // directory; single-pass (appendRaw + footer count) by design
+    override def bulkAppend(paths: Seq[String], graph: Option[String],
+                            compact: Boolean): Option[(Long, Long)] =
+      Some(graft.rdf.BulkLoad.runWith(spark, repo.journal, paths, graph, compact))
     override def metadataCount(graph: Option[String]): Option[Long] = {
       val j = repo.journal
       val v = j.version
@@ -420,34 +237,21 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
         case None => if (graph.isEmpty) Some(0L) else None
       }
     }
-    override def backup(target: Path): Long = synchronized {
-      // under the tenant write lock: no commit can land mid-copy, so
-      // the snapshot is exactly the current version
-      repo.journal.backupTo(target)
-      repo.version
+    override def backup(target: Path): Unit = repo.journal.backupTo(target)
+    override def prepareStaged(items: Seq[Staged], expect: Long, head: Graft): Unit = {
+      validate(items, expect, head); ()
     }
-    def commitStaged(items: Seq[Either[String, DataFrame]],
-                     expectVersion: Long): Long = synchronized {
-      val (adds, dels) = validateStaged(items, expectVersion)
-      val v = repo.journal.commit(adds, dels)
-      maybeCompact()
-      v
+    // the whole tx lands as ONE journal commit
+    def commitStaged(items: Seq[Staged], expect: Long, head: Graft): Unit = {
+      val (adds, dels) = validate(items, expect, head)
+      repo.journal.commit(adds, dels); ()
     }
-    override def prepareStaged(items: Seq[Either[String, DataFrame]],
-                               expectVersion: Long): Unit = synchronized {
-      validateStaged(items, expectVersion); ()
-    }
-    /** The front half of a staged commit: fold the items into one
-      * (adds, dels) and run the two-sided conflict validation; throws
-      * [[TxConflict]] exactly when a commit now would. */
-    private def validateStaged(items: Seq[Either[String, DataFrame]],
-                               expectVersion: Long): (DataFrame, DataFrame) = {
-      val head = current
-      val mixed = items.map {
-        case Left(text) => Left(graft.sparql.Parser.parseUpdates(text))
-        case Right(df)  => Right(df)
-      }
-      var (adds, dels) = Update.quadsDeltaMixed(head.store, mixed, head.defaultGraph)
+    /** Fold the items into one (adds, dels) and run the two-sided
+      * conflict validation; throws [[TxConflict]] exactly when a commit
+      * now would. */
+    private def validate(items: Seq[Staged], expectVersion: Long,
+                         head: Graft): (DataFrame, DataFrame) = {
+      var (adds, dels) = Update.quadsDeltaMixed(head.store, items, head.defaultGraph)
       if (repo.version != expectVersion) {
         // Two-sided conflict validation when the head moved:
         //
@@ -457,8 +261,8 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
         //    wrote — 409 when that set intersects THIS tx's write set.
         //    Compaction commits are skipped: a compaction snapshot
         //    names every graph but changes nothing logically, and
-        //    maybeCompact() runs after every write, so counting it
-        //    would 409 every tx racing an auto-compaction.
+        //    compaction runs after every write when due, so counting
+        //    it would 409 every tx racing an auto-compaction.
         //
         // 2. READ set, by re-evaluation: graph manifests can't tell
         //    WHAT an update's WHERE read, so the staged delta is
@@ -490,7 +294,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
         }
         val asSeen = at(expectVersion)
         val (adds0, dels0) =
-          Update.quadsDeltaMixed(asSeen.store, mixed, asSeen.defaultGraph)
+          Update.quadsDeltaMixed(asSeen.store, items, asSeen.defaultGraph)
         def differ(x: DataFrame, y: DataFrame): Boolean =
           x.exceptAll(y).limit(1).count() > 0 ||
             y.exceptAll(x).limit(1).count() > 0
@@ -502,7 +306,6 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       }
       (adds, dels)
     }
-    def destroy(): Unit = deleteRecursively(dir)
   }
 
   /** Truth-maintenance namespace — the reference's inference-enabled
@@ -514,221 +317,268 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     * ([[graft.inference.MaintainedClosure]], DYNAMIC program: the
     * TBox arrives over the protocol as statements). Queries — head and
     * `?timestamp=` historical reads alike — serve the CLOSED
-    * (entailed) store; mutations commit through the maintained
-    * closure; suppressed requests commit verbatim and stay unclosed
-    * until a re-derive-tier commit converges them.
+    * (entailed) store; commits go through the maintained closure;
+    * suppressed ones commit verbatim and stay unclosed until a
+    * re-derive-tier commit converges them.
     *
     * TRIPLES mode: the reference does not support truth maintenance
     * over quads (BigdataSail — TM requires a triples-mode KB), so
     * graph-scoped Graph Store ops are refused loud and all statements
     * live in the default graph. */
-  private final class TmTenant(tm: graft.inference.MaintainedClosure,
-                               dir: Path) extends Tenant {
-    import org.apache.spark.sql.functions.{col, lit}
-    @volatile private var cached: (Long, Graft) = (-1L, null)
-    private def spoOf(df: DataFrame): DataFrame =
-      df.select("s", "p", "o").distinct()
-    // per-namespace analyzer + persisted literal text index compose
-    // with TM exactly like DurableTenant — the index maintains over
-    // the CLOSED journal (bds:search sees what queries see: the
-    // entailed store), synced at attach and on every write
-    private val analyzerConf: Option[String] = {
-      val f = dir.resolve("analyzer.conf")
-      if (Files.exists(f)) Some(Files.readString(f).trim).filter(_.nonEmpty) else None
+  private final class TmSink(tm: graft.inference.MaintainedClosure)
+      extends Sink("truthMaintenance") {
+    private def view(t: DataFrame): Graft = Graft(spark, QuadStore(local(t)))
+    private def spo(df: DataFrame): DataFrame =
+      df.select(Spo.map(col): _*).distinct().localCheckpoint()
+    def version: Long = tm.version
+    def head: Graft = view(tm.closure())
+    override def at(v: Long): Graft = view(tm.closure(v))
+    override def asserted(v: Long): Option[Graft] = Some(view(tm.base(v)))
+    def commit(adds: DataFrame, dels: DataFrame, suppress: Boolean): Unit = {
+      val (a, d) = (spo(adds), spo(dels))
+      if (suppress) tm.commitRaw(a, d)
+      // ONE journal commit carries remove+insert — the ATOMIC contract
+      // of update-with-body (a crash cannot persist the removal without
+      // the insert, and one HTTP request = one version)
+      else if (!a.isEmpty || !d.isEmpty) tm.commitDelta(a, d)
+      ()
     }
-    private val textIx: Option[graft.search.PersistedSearchIndex] = {
-      val d = dir.resolve("textindex")
-      if (graft.search.PersistedSearchIndex.exists(d.toString)) {
-        val ix = graft.search.PersistedSearchIndex.open(spark, d.toString)
-        graft.rdf.TextIndexMaintenance.sync(ix, tm.journals._2)
-        Some(ix)
-      } else None
-    }
-    private def withConf(g: Graft): Graft = {
-      val g1 = withAnalyzer(g)
-      textIx match {
-        case Some(ix) if ix.version == tm.journals._2.version =>
-          g1.copy(textIndex = Some(ix.view))
-        case _ => g1
-      }
-    }
-    private def withAnalyzer(g: Graft): Graft =
-      if (analyzerConf.isDefined) g.copy(analyzerName = analyzerConf) else g
-    private def view(t: DataFrame): Graft = withAnalyzer(Graft(spark, QuadStore(
-      t.select(col("s"), col("p"), col("o"), lit("g:default").as("g")))))
-    def current: Graft = {
-      val c = cached
-      if (c._1 == tm.version && c._2 != null) c._2
-      else synchronized {
-        // version is re-read INSIDE the lock and the closure read from
-        // the same lock-held point (mutations share this monitor), so
-        // a commit landing between the fast-path check and here can
-        // never cache a NEW closure under an OLD version key
-        val vNow = tm.version
-        if (cached._1 != vNow || cached._2 == null)
-          cached = (vNow, withConf(view(tm.closure())))
-        cached._2
-      }
-    }
-    // historical / asserted views never attach the head index (it
-    // serves hits for literals those views may not contain)
-    override def at(version: Long): Graft = view(tm.closure(version))
-    override def asserted: Graft = view(tm.base())
-    override def assertedAt(version: Long): Graft = view(tm.base(version))
-    override def version: Long = tm.version
-    // bd:history serves the ASSERTED change log (the base journal) —
-    // entailment churn is derived state, not user history
-    override def journal: Option[graft.rdf.Journal] = Some(tm.journals._1)
-    private def maybeCompact(): Unit = {
+    override def compactDue: Boolean = {
       val b = tm.journals._1
-      val compacting = b.version - b.lastCompacted >= autoCompactEvery
-      if (compacting) tm.compact()
-      // the index catches up to the CLOSED head (delta-sized batch);
-      // compaction is its vacuum/compact moment too (the DurableTenant
-      // reclaim discipline)
-      textIx.foreach { ix =>
-        graft.rdf.TextIndexMaintenance.sync(ix, tm.journals._2)
-        if (compacting) { ix.vacuum(); ix.compact() }
-      }
+      b.version - b.lastCompacted >= autoCompactEvery
     }
-    private def applyDelta(adds: DataFrame, dels: DataFrame,
-                           suppress: Boolean): Unit = {
-      val a = spoOf(adds).localCheckpoint()
-      val d = spoOf(dels).localCheckpoint()
-      if (suppress) { tm.commitRaw(a, d); () }
-      else if (!a.isEmpty || !d.isEmpty) {
-        // ONE journal commit carries remove+insert — the documented
-        // ATOMIC contract of updateWithBody (a crash cannot persist
-        // the removal without the insert, readers never observe the
-        // intermediate state, and one HTTP request = one version)
-        tm.commitDelta(a, d)
-        ()
-      }
-      maybeCompact()
-    }
-    private def updateOpsTm(ops: Seq[graft.sparql.UpdateOp],
-                            suppress: Boolean): Unit = synchronized {
-      val head = current
-      // the ops' WHERE clauses evaluate against the ENTAILED store
-      // (queries on an inferencing namespace see inference — the
-      // reference's TM stores behave the same); the delta then applies
-      // to the ASSERTED statements, DRed keeping derivable rows
-      val (adds, dels) = Update.quadsDeltaSeq(head.store, ops, head.defaultGraph)
-      applyDelta(adds, dels, suppress)
-    }
-    def updateOps(ops: Seq[graft.sparql.UpdateOp]): Unit =
-      updateOpsTm(ops, suppress = false)
-    override def updateOpsSuppressed(ops: Seq[graft.sparql.UpdateOp]): Unit =
-      updateOpsTm(ops, suppress = true)
-    def ingest(quads: DataFrame): Long = synchronized {
-      val q = spoOf(quads).localCheckpoint()
-      tm.assertTriples(q)
-      maybeCompact()
-      q.count()
-    }
-    override def ingestSuppressed(quads: DataFrame): Long = synchronized {
-      val q = spoOf(quads).localCheckpoint()
-      tm.commitRaw(q, q.limit(0))
-      maybeCompact()
-      q.count()
-    }
-    private def removeTm(spo: DataFrame, suppress: Boolean): Long = synchronized {
-      val r = spoOf(spo).localCheckpoint()
-      // modified count = what was actually ASSERTED (retracting an
-      // inferred-only or absent row is a no-op on the base)
-      val doomed = tm.base().join(r, Seq("s", "p", "o"), "left_semi")
-        .localCheckpoint()
-      if (suppress) tm.commitRaw(r.limit(0), r) else tm.retractTriples(r)
-      maybeCompact()
-      doomed.count()
-    }
-    def remove(spo: DataFrame): Long = removeTm(spo, suppress = false)
-    override def removeSuppressed(spo: DataFrame): Long =
-      removeTm(spo, suppress = true)
-    // triples-mode: the quad form projects to statements (the only
-    // graph is the synthetic default tag)
-    def removeQuads(quads: DataFrame): Long = removeTm(quads, suppress = false)
-    override def removeQuadsSuppressed(quads: DataFrame): Long =
-      removeTm(quads, suppress = true)
-    def updateWithBody(removeSpo: DataFrame, adds: DataFrame,
-                       suppress: Boolean): Long = synchronized {
-      val r = spoOf(removeSpo).localCheckpoint()
-      val a = spoOf(adds).localCheckpoint()
-      val doomed = tm.base().join(r, Seq("s", "p", "o"), "left_semi")
-        .localCheckpoint()
-      // the add side counts like the remove side: only statements NOT
-      // already asserted are modifications (a re-insert counts 0)
-      val added = a.join(tm.base(), Seq("s", "p", "o"), "left_anti")
-        .localCheckpoint()
-      applyDelta(a, r, suppress)
-      doomed.count() + added.count()
-    }
-    private def triplesOnly(): Nothing = sys.error(
-      "truth-maintenance namespaces are triples-mode (the reference's " +
-        "TM requires a triples-mode KB) — graph-scoped Graph Store " +
-        "operations are not supported")
-    // GSP on the DEFAULT graph is the triples-mode store itself:
-    // PUT = replace-all (retract the asserted base, assert the body),
-    // DELETE = retract-all; NAMED graphs are refused loud above
-    def putGraph(g: String, quads: DataFrame): Unit =
-      if (g != "g:default") triplesOnly()
-      else synchronized { applyDelta(quads, tm.base(), suppress = false) }
-    def dropGraph(g: String): Unit =
-      if (g != "g:default") triplesOnly()
-      else synchronized {
-        applyDelta(tm.base().limit(0), tm.base(), suppress = false)
-      }
-    override def bulkLoad(paths: Seq[String], graph: Option[String],
-                          compact: Boolean): (Long, Long) = synchronized {
-      require(graph.isEmpty,
-        "truth-maintenance namespaces are triples-mode — no target graph")
-      val quads = paths
-        .map(p => Update.loadOpQuads(spark, p, None, "g:default"))
-        .reduce(_ unionAll _)
-      val n = ingest(quads)
-      if (compact) tm.compact()
-      (tm.version, n)
-    }
-    // staged tx: whole-store first-committer-wins (each item commits
-    // through the maintained closure in arrival order — TM cannot fold
-    // a tx into one commit because each mutation's entailment delta
-    // depends on the prior closed state)
-    def commitStaged(items: Seq[Either[String, DataFrame]],
-                     expectVersion: Long): Long = synchronized {
-      if (tm.version != expectVersion)
+    override def compact(): Unit = tm.compact()
+    // bd:history serves the ASSERTED change log (entailment churn is
+    // derived state, not user history); the text index follows the
+    // CLOSED journal — bds:search sees what queries see
+    override def history: Option[Journal] = Some(tm.journals._1)
+    override def indexed: Option[Journal] = Some(tm.journals._2)
+    override def local(quads: DataFrame): DataFrame =
+      quads.select(col("s"), col("p"), col("o"), lit(DefaultGraph).as("g"))
+    override def requireGraph(g: String): Unit =
+      if (g != DefaultGraph) sys.error(
+        "truth-maintenance namespaces are triples-mode (the reference's " +
+          s"TM requires a triples-mode KB) — graph $g is not supported")
+    // staged tx: whole-store first-committer-wins
+    override def prepareStaged(items: Seq[Staged], expect: Long, head: Graft): Unit =
+      if (tm.version != expect)
         throw new TxConflict(
-          s"tx conflict: head moved from v$expectVersion to v${tm.version} " +
+          s"tx conflict: head moved from v$expect to v${tm.version} " +
             "(truth-maintenance namespaces validate at whole-store granularity)")
-      // pre-parse every update text and pre-materialize every data
-      // item BEFORE the first commit: a malformed later item must not
-      // leave earlier items durably committed. Beyond this point TM
-      // transactions are NOT failure-atomic — each item commits
-      // through the maintained closure in arrival order, because each
-      // mutation's entailment delta depends on the prior closed state.
-      val staged = items.map {
-        case Left(text) => Left(graft.sparql.Parser.parseUpdates(text))
-        case Right(df)  => Right(spoOf(df).localCheckpoint())
+    def commitStaged(items: Seq[Staged], expect: Long, head: Graft): Unit = {
+      prepareStaged(items, expect, head)
+      // every data item materializes BEFORE the first commit (texts
+      // arrive parsed): a malformed later item must not leave earlier
+      // items durably committed. Beyond this point TM transactions are
+      // NOT failure-atomic — each item commits through the maintained
+      // closure in arrival order, because each mutation's entailment
+      // delta depends on the prior closed state.
+      items.map(_.map(spo)).foreach {
+        case Left(ops) =>
+          val h = this.head
+          val (a, d) = Update.quadsDeltaSeq(h.store, ops, h.defaultGraph)
+          commit(a, d, suppress = false)
+        case Right(df) => commit(df, df.limit(0), suppress = false)
       }
-      staged.foreach {
-        case Left(ops) => updateOps(ops)
-        case Right(df) => ingest(df)
-      }
-      tm.version
     }
-    def prepareStaged(items: Seq[Either[String, DataFrame]],
-                      expectVersion: Long): Unit = {
-      if (tm.version != expectVersion)
-        throw new TxConflict(
-          s"tx conflict: head moved from v$expectVersion to v${tm.version} " +
-            "(truth-maintenance namespaces validate at whole-store granularity)")
-    }
-    override def backup(target: Path): Long = synchronized {
+    override def backup(target: Path): Unit = {
       val (b, c) = tm.journals
       b.backupTo(target.resolve("base"))
       c.backupTo(target.resolve("closed"))
-      tm.version
     }
-    def destroy(): Unit = deleteRecursively(dir)
+  }
+
+  /** One namespace over its [[Sink]]. Written once for every kind:
+    * the per-namespace write lock, the delta and its modified count,
+    * the analyzer conf and text index, and the head cache.
+    *
+    * MODIFIED COUNT: a REST write answers `<data modified="N"/>`, N
+    * the statements actually added or removed — `doomed` (the
+    * removes semi-joined against the asserted base) plus `added` (the
+    * adds anti-joined against it). A re-insert or the removal of an
+    * absent statement counts 0 on every kind. SPARQL UPDATE answers
+    * 204 and computes no count.
+    *
+    * HEAD CACHE: reads serve one connection per head version, so the
+    * union-default-graph merge view materializes once per commit, not
+    * once per request. When the head moves, the superseded connection
+    * is retired; its view is released once no request of this
+    * namespace is in flight ([[serving]]). */
+  private final class Tenant(sink: Sink, dir: Option[Path]) {
+    // per-namespace analyzer config, persisted beside the journal
+    // (ConfigurableAnalyzerFactory stores it in namespace properties);
+    // read once at attach — restart reattaches it with the namespace
+    private val analyzerConf: Option[String] = dir.map(_.resolve("analyzer.conf"))
+      .filter(Files.exists(_)).map(Files.readString(_).trim).filter(_.nonEmpty)
+    private def withConf(g: Graft): Graft =
+      if (analyzerConf.isDefined) g.copy(analyzerName = analyzerConf) else g
+    // namespace-owned persisted literal text index (created by the
+    // namespace POST's textIndex=true): reattached with the namespace
+    // and synced at attach — a crash between a journal commit and its
+    // index sync heals here, the MaintainedClosure recovery discipline
+    private val textIx: Option[(graft.search.PersistedSearchIndex, Journal)] = for {
+      d <- dir.map(_.resolve("textindex").toString)
+      if graft.search.PersistedSearchIndex.exists(d)
+      j <- sink.indexed
+    } yield {
+      val ix = graft.search.PersistedSearchIndex.open(spark, d)
+      graft.rdf.TextIndexMaintenance.sync(ix, j)
+      (ix, j)
+    }
+
+    @volatile private var cached: (Long, Graft) = (-1L, null)
+    private val inFlight = new AtomicInteger()
+    private val retired = new ConcurrentLinkedQueue[Graft]()
+
+    def kind: String = sink.kind
+    def version: Long = sink.version
+    def journal: Option[Journal] = sink.history
+
+    def current: Graft = {
+      val c = cached
+      if (c._2 != null && c._1 == sink.version) c._2
+      else synchronized {
+        // under the write lock: no commit lands between the version
+        // read and the view it keys
+        val v = sink.version
+        if (cached._2 == null || cached._1 != v) {
+          Option(cached._2).foreach(retired.add)
+          // the index attaches only when current to the head (a stale
+          // index must not serve hits for literals since removed);
+          // historical and asserted views never attach it
+          cached = (v, textIx match {
+            case Some((ix, j)) if ix.version == j.version =>
+              withConf(sink.head).copy(textIndex = Some(ix.view))
+            case _ => withConf(sink.head)
+          })
+        }
+        cached._2
+      }
+    }
+
+    /** Run one request of this namespace — query build, execution and
+      * result streaming — counted in flight; the last request out
+      * releases the retired head views. */
+    def serving[T](body: => T): T = {
+      inFlight.incrementAndGet()
+      try body
+      finally if (inFlight.decrementAndGet() == 0) releaseRetired()
+    }
+
+    // a retired view can only feed requests that read the cache before
+    // it was retired; a zero count read AFTER the poll means every one
+    // of them has finished
+    private def releaseRetired(): Unit = retired.synchronized {
+      val batch = Iterator.continually(retired.poll()).takeWhile(_ != null).toList
+      if (inFlight.get() == 0) batch.foreach(_.release()) else batch.foreach(retired.add)
+    }
+
+    /** The ASSERTED-statements view — `includeInferred=false`
+      * (QueryServlet.java:140, default true; honored by query/
+      * HASSTMT/GETSTMTS): the head itself except on truth
+      * maintenance. */
+    def asserted: Graft = sink.asserted(-1).map(withConf).getOrElse(current)
+    def at(v: Long): Graft = withConf(sink.at(v))
+    def assertedAt(v: Long): Graft = sink.asserted(v).map(withConf).getOrElse(at(v))
+
+    /** The per-namespace write lock (the reference's single-writer
+      * journal lock: two concurrent REST updates queue instead of one
+      * failing loud on the journal's version race, or both counting
+      * the same removal). Every write ends by compacting when due —
+      * FIRST, so the text-index sync lands on the post-compaction head
+      * (syncing before it would leave the index one version behind and
+      * detach it until the next write). */
+    private def writing[T](body: => T): T = synchronized {
+      val r = body
+      val compacting = sink.compactDue
+      if (compacting) sink.compact()
+      textIx.foreach { case (ix, j) =>
+        graft.rdf.TextIndexMaintenance.sync(ix, j)
+        // the journal's compaction moment is the index's too: collapse
+        // its segment log so steady-state search reads ONE postings
+        // scan. Vacuum FIRST — it deletes only files the CURRENT
+        // manifest no longer references, i.e. the generation the
+        // PREVIOUS compaction superseded, giving in-flight readers a
+        // full compaction cycle of grace — then compact. Without the
+        // vacuum the server leaks a postings copy per compaction.
+        if (compacting) { ix.vacuum(); ix.compact() }
+      }
+      r
+    }
+
+    /** SPARQL UPDATE: the ops' delta, evaluated against the head (the
+      * ENTAILED store on truth maintenance — queries there see
+      * inference; the delta then applies to the asserted statements),
+      * committed as one version. No count: the protocol answers 204. */
+    def updateOps(ops: Seq[UpdateOp], suppress: Boolean = false): Unit = writing {
+      if (!sink.onHandle(ops)) {
+        val h = current
+        val (adds, dels) = Update.quadsDeltaSeq(h.store, ops, h.defaultGraph)
+        sink.commit(adds, dels, suppress)
+      }
+    }
+    def update(text: String): Unit = updateOps(Parser.parseUpdates(text))
+
+    /** The REST write path: remove the asserted statements matching
+      * `removes` on `keys` (every graph's occurrence for (s,p,o) keys),
+      * insert `adds`, as ONE version; returns the modified count. */
+    def write(adds: DataFrame = emptyQuads, removes: DataFrame = emptyQuads,
+              keys: Seq[String] = Quad, suppress: Boolean = false): Long = writing {
+      val base = asserted.store.quads
+      val a = sink.local(adds).select(Quad.map(col): _*).distinct().localCheckpoint()
+      val doomed = base.join(sink.local(removes).select(keys.map(col): _*).distinct(),
+        keys, "left_semi").localCheckpoint()
+      // the store probe `doomed` already runs, for the adds: the store
+      // is scanned and the request side broadcast
+      val added = a.count() - base.join(a, Quad, "left_semi").distinct().count()
+      sink.commit(a, doomed, suppress)
+      doomed.count() + added
+    }
+
+    /** Graph Store Protocol PUT: replace graph `g` with `quads` (DELETE:
+      * no quads) — one version, no count. */
+    def replaceGraph(g: String, quads: DataFrame = emptyQuads): Unit = writing {
+      sink.requireGraph(g)
+      sink.commit(quads, asserted.store.quads.filter(col("g") === lit(g)), suppress = false)
+    }
+
+    /** Mass-load server-visible files/globs as ONE write (the
+      * DataLoaderServlet analog); returns (version, statements). */
+    def bulkLoad(paths: Seq[String], graph: Option[String],
+                 compact: Boolean): (Long, Long) = writing {
+      graph.foreach(sink.requireGraph)
+      sink.bulkAppend(paths, graph, compact).getOrElse {
+        val n = write(paths
+          .map(p => Update.loadOpQuads(spark, p, graph, current.defaultGraph))
+          .reduce(_ unionAll _))
+        if (compact) sink.compact()
+        (sink.version, n)
+      }
+    }
+
+    def metadataCount(graph: Option[String]): Option[Long] = sink.metadataCount(graph)
+
+    /** Atomically apply a staged tx's items (update texts + parsed quad
+      * batches); `expect` is the version at tx creation — a head that
+      * moved since is validated by the sink (first-committer-wins).
+      * Returns the committed version. */
+    def commitStaged(items: Seq[Either[String, DataFrame]], expect: Long): Long =
+      writing { sink.commitStaged(parsed(items), expect, current); sink.version }
+    /** PREPARE-TX: advisory (no lock is held between prepare and commit). */
+    def prepareStaged(items: Seq[Either[String, DataFrame]], expect: Long): Unit =
+      synchronized { sink.prepareStaged(parsed(items), expect, current) }
+    private def parsed(items: Seq[Either[String, DataFrame]]): Seq[Staged] =
+      items.map(_.left.map(Parser.parseUpdates))
+
+    /** Online backup of the journal(s) under the write lock (quiesced:
+      * the snapshot is exactly the returned version). */
+    def backup(target: Path): Long = synchronized { sink.backup(target); sink.version }
+
+    def destroy(): Unit = {
+      synchronized { Option(cached._2).foreach(retired.add); cached = (-1L, null) }
+      releaseRetired()
+      dir.foreach(deleteRecursively)
+    }
   }
 
   /** Staged-tx commit lost first-committer-wins validation. */
@@ -747,7 +597,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
 
   journalDir match {
     case None =>
-      namespaces.put(defaultNamespace, new MemTenant(new AtomicReference(initial)))
+      namespaces.put(defaultNamespace, new Tenant(new MemSink(initial), None))
     case Some(d) =>
       val root = Paths.get(d)
       Files.createDirectories(root)
@@ -765,20 +615,21 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       // if a crash landed between the two commits)
       val subs = Files.list(root)
       try subs.iterator().asScala.foreach { sub =>
-        if (Files.isDirectory(sub.resolve("tm")))
-          namespaces.put(sub.getFileName.toString,
-            new TmTenant(graft.inference.MaintainedClosure.openDynamic(
-              spark, sub.resolve("tm").toString), sub))
-        else if (Files.exists(sub.resolve("commits")))
-          namespaces.put(sub.getFileName.toString,
-            new DurableTenant(Repository.open(spark, sub.toString), sub))
+        val sink =
+          if (Files.isDirectory(sub.resolve("tm")))
+            Some(new TmSink(graft.inference.MaintainedClosure.openDynamic(
+              spark, sub.resolve("tm").toString)))
+          else if (Files.exists(sub.resolve("commits")))
+            Some(new JournalSink(Repository.open(spark, sub.toString), sub))
+          else None
+        sink.foreach(s => namespaces.put(sub.getFileName.toString, new Tenant(s, Some(sub))))
       } finally subs.close()
       if (!namespaces.containsKey(defaultNamespace)) {
         val sub = root.resolve(defaultNamespace)
         val repo = Repository.create(spark, sub.toString)
         if (!initial.store.quads.isEmpty)
           repo.journal.append(initial.store.quads)
-        namespaces.put(defaultNamespace, new DurableTenant(repo, sub))
+        namespaces.put(defaultNamespace, new Tenant(new JournalSink(repo, sub), Some(sub)))
       }
   }
 
@@ -1183,6 +1034,15 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     * bodies on disk. */
   private def dropSpill(p: Path): Unit = { Files.deleteIfExists(p); () }
 
+  /** `suppressTruthMaintenance=true` — the reference's update servlets
+    * all accept the knob (QueryServlet.java:132, DeleteServlet.java:128):
+    * a verbatim commit on truth-maintenance namespaces, a no-op elsewhere. */
+  private def suppressed(qp: Map[String, Option[String]]): Boolean =
+    qp.get("suppressTruthMaintenance").flatten.exists(_.toBoolean)
+
+  private def respondModified(ex: HttpExchange, n: Long): Unit =
+    respond(ex, 200, "application/xml", s"""<?xml version="1.0"?><data modified="$n"/>""")
+
   /** Intern a plain IRI the way the loaders do (`urn:graft:x` → `x`). */
   private def internIri(iri: String): String =
     if (iri.startsWith(Parser.Base)) iri.drop(Parser.Base.length) else iri
@@ -1508,15 +1368,10 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
         respond(ex, 200, "application/xml",
           s"""<?xml version="1.0"?><data modified="${staged.count()}" staged="true"/>""")
       case None =>
-        val suppress = qp.get("suppressTruthMaintenance").flatten
-          .exists(_.toBoolean)
         val n =
-          try inJobGroup(ns, "data-POST") {
-            if (suppress) t.ingestSuppressed(quads) else t.ingest(quads)
-          }
+          try inJobGroup(ns, "data-POST") { t.write(quads, suppress = suppressed(qp)) }
           finally spill.foreach(dropSpill)
-        respond(ex, 200, "application/xml",
-          s"""<?xml version="1.0"?><data modified="$n"/>""")
+        respondModified(ex, n)
     }
   }
 
@@ -1536,13 +1391,11 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     val ext = rdfExtension(contentType(ex)).getOrElse(
       sys.error(s"unsupported RDF content type: ${contentType(ex)}"))
     val (adds, spill) = bodyQuads(ex, ext, None, t.current.defaultGraph)
-    val suppress = qp.get("suppressTruthMaintenance").flatten.exists(_.toBoolean)
     val n =
       try inJobGroup(ns, "PUT update-with-query") {
-        t.updateWithBody(t.current.query(q).select("s", "p", "o"), adds, suppress)
+        t.write(adds, t.current.query(q), Spo, suppressed(qp))
       } finally dropSpill(spill)
-    respond(ex, 200, "application/xml",
-      s"""<?xml version="1.0"?><data modified="$n"/>""")
+    respondModified(ex, n)
   }
 
   /** `POST /sparql?updatePost` with a multipart body carrying RDF
@@ -1566,17 +1419,11 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       "updatePost needs an 'add' and/or 'remove' part")
     val remove = quadsOf("remove")
     val add = quadsOf("add")
-    val suppress = qp.get("suppressTruthMaintenance").flatten.exists(_.toBoolean)
     val n =
       try inJobGroup(ns, "updatePost") {
-        t.updateWithBody(
-          remove.map(_._1.select("s", "p", "o"))
-            .getOrElse(emptyQuads.select("s", "p", "o")),
-          add.map(_._1).getOrElse(emptyQuads),
-          suppress)
+        t.write(add.fold(emptyQuads)(_._1), remove.fold(emptyQuads)(_._1), Spo, suppressed(qp))
       } finally (remove.toSeq ++ add.toSeq).foreach(p => dropSpill(p._2))
-    respond(ex, 200, "application/xml",
-      s"""<?xml version="1.0"?><data modified="$n"/>""")
+    respondModified(ex, n)
   }
 
   /** `DELETE /sparql?query=<CONSTRUCT…>` or DELETE-with-body
@@ -1599,14 +1446,9 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       // below — the reference wipes the namespace on an empty access
       // path, a foot-gun this server keeps behind the explicit update
       // path (DROP ALL).
-      val suppressAp = qp.get("suppressTruthMaintenance").flatten
-        .exists(_.toBoolean)
-      val n = inJobGroup(ns, "data-DELETE (access path)") {
-        val doomed = accessPath(t.current, qp)
-        if (suppressAp) t.removeQuadsSuppressed(doomed) else t.removeQuads(doomed)
-      }
-      respond(ex, 200, "application/xml",
-        s"""<?xml version="1.0"?><data modified="$n"/>""")
+      respondModified(ex, inJobGroup(ns, "data-DELETE (access path)") {
+        t.write(removes = accessPath(t.current, qp), suppress = suppressed(qp))
+      })
       return
     }
     val (spo, spill) = delQuery match {
@@ -1614,22 +1456,19 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
         val ast = Parser.parse(q)
         require(isGraphResult(ast),
           "DELETE with query requires CONSTRUCT or DESCRIBE")
-        (t.current.query(q).select("s", "p", "o"), None)
+        (t.current.query(q), None)
       case None =>
         val ext = rdfExtension(contentType(ex)).getOrElse(
           sys.error(s"DELETE needs ?query=… or an RDF body; got content type '${contentType(ex)}'"))
         val (q, tmp) = bodyQuads(ex, ext, None, t.current.defaultGraph)
-        (q.select("s", "p", "o"), Some(tmp))
+        (q, Some(tmp))
     }
-    val suppress = params(rawQuery(ex)).get("suppressTruthMaintenance")
-      .flatten.exists(_.toBoolean)
     val n =
       try inJobGroup(ns, "data-DELETE") {
-        if (suppress) t.removeSuppressed(spo) else t.remove(spo)
+        t.write(removes = spo, keys = Spo, suppress = suppressed(qp))
       }
       finally spill.foreach(dropSpill)
-    respond(ex, 200, "application/xml",
-      s"""<?xml version="1.0"?><data modified="$n"/>""")
+    respondModified(ex, n)
   }
 
   /** `GET /sparql?HASSTMT&s=&p=&o=&c=` (QueryServlet.java:159) —
@@ -1766,7 +1605,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
           val ext = rdfExtension(contentType(ex)).getOrElse(
             sys.error(s"unsupported RDF content type: ${contentType(ex)}"))
           val (quads, spill) = bodyQuads(ex, ext, Some(g), g)
-          try inJobGroup(ns, s"GSP PUT $g") { t.putGraph(g, quads) }
+          try inJobGroup(ns, s"GSP PUT $g") { t.replaceGraph(g, quads) }
           finally dropSpill(spill)
           respond(ex, 204, "text/plain", "")
         case "POST" =>
@@ -1774,13 +1613,12 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
             sys.error(s"unsupported RDF content type: ${contentType(ex)}"))
           val (quads, spill) = bodyQuads(ex, ext, Some(g), g)
           val n =
-            try inJobGroup(ns, s"GSP POST $g") { t.ingest(quads) }
+            try inJobGroup(ns, s"GSP POST $g") { t.write(quads) }
             finally dropSpill(spill)
-          respond(ex, 200, "application/xml",
-            s"""<?xml version="1.0"?><data modified="$n"/>""")
+          respondModified(ex, n)
         case "DELETE" => inJobGroup(ns, s"GSP DELETE $g") {
           if (graphRows.isEmpty) respond(ex, 404, "text/plain", s"no graph: $g")
-          else { t.dropGraph(g); respond(ex, 204, "text/plain", "") }
+          else { t.replaceGraph(g); respond(ex, 204, "text/plain", "") }
         }
         case other => respond(ex, 405, "text/plain", s"method not allowed: $other")
       }
@@ -1818,12 +1656,9 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
           // suppressTruthMaintenance=true (query string or form): skip
           // closure maintenance for THIS request (no-op on non-TM
           // namespaces) — QueryServlet.java:132's knob
-          val suppress = params(rawQuery(ex))
-            .get("suppressTruthMaintenance").flatten
+          val knob = params(rawQuery(ex)).get("suppressTruthMaintenance").flatten
             .orElse(if (isForm) formParam(body, "suppressTruthMaintenance") else None)
-            .exists(_.toBoolean)
-          if (suppress) tenant(ns).updateOpsSuppressed(rewritten)
-          else tenant(ns).updateOps(rewritten)
+          tenant(ns).updateOps(rewritten, knob.exists(_.toBoolean))
       }
       respond(ex, 204, "text/plain", "")
     } catch {
@@ -2202,12 +2037,12 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
           // the workbench compiles with the namespace's journal in
           // scope too — bd:history works from the form like /sparql
           val t = tenant(ns)
-          val df = t.journal match {
-            case Some(j) => graft.sparql.HistoryService.withJournal(j)(t.current.query(q))
-            case None    => t.current.query(q)
-          }
-          val (vars, rows) = inJobGroup(ns, s"WORKBENCH $q") {
-            (df.columns.toSeq, df.limit(501).collect())
+          val (vars, rows) = t.serving {
+            val df = t.journal match {
+              case Some(j) => graft.sparql.HistoryService.withJournal(j)(t.current.query(q))
+              case None    => t.current.query(q)
+            }
+            inJobGroup(ns, s"WORKBENCH $q") { (df.columns.toSeq, df.limit(501).collect()) }
           }
           val shown = rows.take(500)
           val thead = vars.map(v => s"<th>${esc(v)}</th>").mkString
@@ -2342,32 +2177,26 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
                 "(the object-hash twin is a Repository compaction feature)")
             try {
               namespaces.computeIfAbsent(name, { _ =>
-                val t: Tenant = journalDir match {
-                  case None => new MemTenant(new AtomicReference(
-                    Graft.empty(spark).copy(analyzerName = analyzer)))
-                  case Some(d) if wantTm =>
-                    val sub = Paths.get(d).resolve(name)
-                    Files.createDirectories(sub)
-                    val tmStore = graft.inference.MaintainedClosure
-                      .createDynamic(spark, sub.resolve("tm").toString)
-                    analyzer.foreach(a =>
-                      Files.writeString(sub.resolve("analyzer.conf"), a))
-                    if (wantTextIndex)
-                      graft.rdf.TextIndexMaintenance.create(spark,
-                        sub.resolve("textindex").toString, tmStore.journals._2,
-                        analyzer.getOrElse("latin"))
-                    new TmTenant(tmStore, sub)
+                val t = journalDir match {
+                  case None => new Tenant(new MemSink(
+                    Graft.empty(spark).copy(analyzerName = analyzer)), None)
                   case Some(d) =>
                     val sub = Paths.get(d).resolve(name)
-                    val repo = Repository.create(spark, sub.toString)
+                    val sink =
+                      if (!wantTm) new JournalSink(Repository.create(spark, sub.toString), sub)
+                      else {
+                        Files.createDirectories(sub)
+                        new TmSink(graft.inference.MaintainedClosure
+                          .createDynamic(spark, sub.resolve("tm").toString))
+                      }
                     analyzer.foreach(a => Files.writeString(sub.resolve("analyzer.conf"), a))
                     if (wantTextIndex)
                       graft.rdf.TextIndexMaintenance.create(spark,
-                        sub.resolve("textindex").toString, repo.journal,
+                        sub.resolve("textindex").toString, sink.indexed.get,
                         analyzer.getOrElse("latin"))
                     if (wantOspIndex)
                       Files.writeString(sub.resolve("ospindex"), "true")
-                    new DurableTenant(repo, sub)
+                    new Tenant(sink, Some(sub))
                 }
                 createdNew.set(true)
                 t
@@ -2391,9 +2220,9 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
               else respond(ex, 404, "text/plain", s"no namespace: $ns")
             }
           case (ns :: tail, _) =>
-            if (!namespaces.containsKey(ns))
-              respond(ex, 404, "text/plain", s"no namespace: $ns")
-            else tail match {
+            val t = namespaces.get(ns)
+            if (t == null) respond(ex, 404, "text/plain", s"no namespace: $ns")
+            else t.serving(tail match {
               case List("sparql")           => handleQuery(ex, ns)
               case List("sparql", "update") => handleUpdate(ex, ns)
               case List("rdf-graphs")       => handleGraphStore(ex, ns)
@@ -2403,27 +2232,23 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
               case List("properties")       =>
                 // MultiTenancyServlet's properties document, as the
                 // reference's java.util.Properties XML format
-                val durable = journalDir.isDefined
-                val isTm = tenant(ns).isInstanceOf[TmTenant]
+                val isTm = t.kind == "truthMaintenance"
+                val head = t.current
                 val props = Seq(
                   "com.bigdata.rdf.sail.namespace" -> ns,
                   "graft.quads" -> (!isTm).toString,
-                  "graft.durable" -> durable.toString) ++
+                  "graft.durable" -> journalDir.isDefined.toString) ++
                   (if (isTm) Seq("graft.truthMaintenance" -> "true") else Nil) ++
                   journalDir.map(d => "graft.journal" -> s"$d/$ns") ++
-                  tenant(ns).current.analyzerName.map("graft.analyzer" -> _) ++
-                  (if (tenant(ns).current.textIndex.isDefined)
-                     Seq("graft.textIndex" -> "true")
-                   else Nil) ++
-                  (if (tenant(ns).current.ospHash.isDefined)
-                     Seq("graft.ospIndex" -> "current")
-                   else Nil)
+                  head.analyzerName.map("graft.analyzer" -> _) ++
+                  (if (head.textIndex.isDefined) Seq("graft.textIndex" -> "true") else Nil) ++
+                  (if (head.ospHash.isDefined) Seq("graft.ospIndex" -> "current") else Nil)
                 val entries = props.map { case (k, v) =>
                   s"""<entry key="$k">$v</entry>""" }.mkString
                 respond(ex, 200, "application/xml",
                   s"""<?xml version="1.0"?><!DOCTYPE properties SYSTEM "http://java.sun.com/dtd/properties.dtd"><properties>$entries</properties>""")
               case _ => respond(ex, 404, "text/plain", s"no such resource: $rest")
-            }
+            })
           case _ => respond(ex, 405, "text/plain", "method not allowed")
         }
       } catch {
@@ -2434,18 +2259,14 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
 
   // the bare paths resolve the DEFAULT namespace per request — they
   // alias /namespace/<default>/… exactly, never a captured handle
-  server.createContext("/sparql/update",
-    (ex: HttpExchange) => handleUpdate(ex, defaultNamespace))
-  server.createContext("/sparql",
-    (ex: HttpExchange) => handleQuery(ex, defaultNamespace))
-  server.createContext("/rdf-graphs",
-    (ex: HttpExchange) => handleGraphStore(ex, defaultNamespace))
-  server.createContext("/dataloader",
-    (ex: HttpExchange) => handleDataLoader(ex, defaultNamespace))
-  server.createContext("/blueprints",
-    (ex: HttpExchange) => handleBlueprints(ex, defaultNamespace))
-  server.createContext("/backup",
-    (ex: HttpExchange) => handleBackup(ex, defaultNamespace))
+  Seq[(String, (HttpExchange, String) => Unit)](
+    "/sparql/update" -> handleUpdate, "/sparql" -> handleQuery,
+    "/rdf-graphs" -> handleGraphStore, "/dataloader" -> handleDataLoader,
+    "/blueprints" -> handleBlueprints, "/backup" -> handleBackup
+  ).foreach { case (path, handle) =>
+    server.createContext(path, (ex: HttpExchange) =>
+      tenant(defaultNamespace).serving(handle(ex, defaultNamespace)))
+  }
   server.createContext("/namespace", NamespaceHandler)
   server.createContext("/status", StatusHandler)
   server.createContext("/whitelist", WhitelistHandler)

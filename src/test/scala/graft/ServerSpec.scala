@@ -1884,4 +1884,163 @@ class ServerSpec extends AnyFunSuite {
       assert(bad.body().contains("connection-scoped"), bad.body())
     } finally dsrv.stop()
   }
+
+  test("one mutation script on every namespace kind: identical modified counts and state") {
+    val mem = new SparqlServer(Graft.empty(spark)).start()
+    val durable = SparqlServer.durable(Graft.empty(spark), tmp()).start()
+    val nt = "application/n-triples"
+    def t(s: String, o: String, p: String = "p") =
+      s"""<urn:graft:$s> <urn:graft:$p> "$o" .""" + "\n"
+    def enc(x: String) = java.net.URLEncoder.encode(x, "UTF-8")
+    def modified(r: java.net.http.HttpResponse[String]): Int =
+      """modified="(\d+)"""".r.findFirstMatchIn(r.body()).map(_.group(1).toInt)
+        .getOrElse(sys.error(s"${r.statusCode()} ${r.body()}"))
+    def delete(url: String, body: String) =
+      req(url).header("Content-Type", nt)
+        .method("DELETE", java.net.http.HttpRequest.BodyPublishers.ofString(body))
+    /** The script's per-step answers and the final asserted state. */
+    def script(ns: String): (Seq[(String, Int)], Set[(String, String, String)]) = {
+      val sparql = ns + "/sparql"
+      val b = "matrixBoundary"
+      val parts =
+        s"""--$b\r
+           |Content-Disposition: form-data; name="remove"\r
+           |Content-Type: $nt\r
+           |\r
+           |${t("x:4", "d")}\r
+           |--$b\r
+           |Content-Disposition: form-data; name="add"\r
+           |Content-Type: $nt\r
+           |\r
+           |${t("x:5", "e")}\r
+           |--$b--\r
+           |""".stripMargin
+      val steps = Seq(
+        "insert" -> modified(post(sparql, t("x:1", "a") + t("x:2", "b") + t("x:3", "c", "q"), nt)),
+        "re-insert" -> modified(post(sparql, t("x:1", "a") + t("x:2", "b") + t("x:3", "c", "q"), nt)),
+        "delete absent" -> modified(send(delete(sparql, t("x:9", "z")))),
+        "delete present" -> modified(send(delete(sparql, t("x:1", "a")))),
+        // removes x:3's q statement; x:2 is a re-insert, x:4 is new
+        "update-with-body" -> modified(send(req(sparql + "?query=" +
+          enc("CONSTRUCT { ?s q ?o } WHERE { ?s q ?o }"))
+          .header("Content-Type", nt).PUT(java.net.http.HttpRequest.BodyPublishers
+            .ofString(t("x:2", "b") + t("x:4", "d"))))),
+        "updatePost" -> modified(post(sparql + "?updatePost", parts,
+          s"multipart/form-data; boundary=$b")),
+        "delete access path" -> modified(send(req(sparql + "?s=" +
+          enc("<urn:graft:x:5>")).DELETE())),
+        "GSP PUT" -> send(req(ns + "/rdf-graphs?default").header("Content-Type", nt)
+          .PUT(java.net.http.HttpRequest.BodyPublishers
+            .ofString(t("x:6", "f") + t("x:7", "g")))).statusCode(),
+        "GSP DELETE" -> send(req(ns + "/rdf-graphs?default").DELETE()).statusCode(),
+        "suppressed insert" -> modified(post(sparql + "?suppressTruthMaintenance=true",
+          t("x:8", "h") + t("x:9", "i"), nt)),
+        // two racing removals of one statement: the write lock lets
+        // exactly one of them find it
+        "concurrent deletes" -> Seq.fill(2)(http.sendAsync(delete(sparql, t("x:9", "i")).build(),
+          java.net.http.HttpResponse.BodyHandlers.ofString()))
+          .map(f => modified(f.join())).sum)
+      val state = graft.sparql.RemoteService.parseJsonResults(spark,
+        post(sparql + "?includeInferred=false", "SELECT ?s ?p ?o WHERE { ?s ?p ?o }",
+          "application/sparql-query").body())
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+      (steps, state)
+    }
+    try {
+      assert(post(durable.address + "/namespace", "name=tm&truthMaintenance=true",
+        "application/x-www-form-urlencoded").statusCode() == 201)
+      val expected = Seq("insert" -> 3, "re-insert" -> 0, "delete absent" -> 0,
+        "delete present" -> 1, "update-with-body" -> 2, "updatePost" -> 2,
+        "delete access path" -> 1, "GSP PUT" -> 204, "GSP DELETE" -> 204,
+        "suppressed insert" -> 2, "concurrent deletes" -> 1)
+      Seq("memory" -> s"${mem.address}/namespace/kb",
+          "journal" -> s"${durable.address}/namespace/kb",
+          "truthMaintenance" -> s"${durable.address}/namespace/tm").foreach {
+        case (kind, ns) =>
+          val (steps, state) = script(ns)
+          assert(steps == expected, kind)
+          assert(state == Set(("x:8", "p", "h")), kind)
+      }
+    } finally { mem.stop(); durable.stop() }
+  }
+
+  test("head cache: a streaming reader keeps its version across commits; superseded views are released") {
+    val sc = spark.sparkContext
+    // a store whose CSV answer (~35 MB) outgrows the socket buffers:
+    // the server is still streaming when the commits land
+    val n = 100000L
+    val rows = spark.range(n).selectExpr("concat('r:', id) AS s", "'pad' AS p",
+      "concat(repeat('x', 300), id) AS o", "'g:default' AS g")
+    val srv = SparqlServer.durable(Graft.ofQuads(spark, rows), tmp()).start()
+    val before = sc.getPersistentRDDs.keySet
+    // a view of many partitions (uncoalesced: the padding compresses
+    // to almost nothing): the stalled reader has partitions left to
+    // fetch from the view's blocks when the commits land
+    val confs = Map("spark.sql.shuffle.partitions" -> "16",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val saved = confs.map { case (k, v) => val old = spark.conf.get(k); spark.conf.set(k, v); k -> old }
+    try {
+      // the reader: a raw socket with a small receive window, so the
+      // server stalls mid-stream (HttpClient lets the window grow to
+      // the OS maximum, which can hold the whole answer)
+      val addr = java.net.URI.create(srv.address)
+      val sock = new java.net.Socket()
+      sock.setReceiveBufferSize(16 * 1024)
+      sock.connect(new java.net.InetSocketAddress(addr.getHost, addr.getPort))
+      val q = java.net.URLEncoder.encode("SELECT ?s ?o WHERE { ?s pad ?o }", "UTF-8")
+      sock.getOutputStream.write((s"GET /sparql?query=$q HTTP/1.1\r\nHost: ${addr.getHost}\r\n" +
+        "Accept: text/csv\r\nConnection: close\r\n\r\n").getBytes("UTF-8"))
+      val raw = new java.io.BufferedInputStream(sock.getInputStream)
+      def rawLine(): String = { // null at end of stream
+        val b = new StringBuilder
+        var c = raw.read()
+        while (c != '\n' && c != -1) { if (c != '\r') b += c.toChar; c = raw.read() }
+        if (c == -1 && b.isEmpty) null else b.toString
+      }
+      assert(rawLine().contains(" 200 "))
+      while (Option(rawLine()).exists(_.nonEmpty)) {} // headers
+      val chunked = new java.io.InputStream { // chunked transfer decoding
+        private var left = 0
+        def read(): Int = {
+          if (left == 0) {
+            val size = Iterator.continually(rawLine()).dropWhile(l => l != null && l.isEmpty).next()
+            left = if (size == null) 0 else Integer.parseInt(size.trim, 16)
+            if (left == 0) left = -1
+          }
+          if (left < 0) -1 else { left -= 1; raw.read() }
+        }
+      }
+      val lines = new java.io.BufferedReader(new java.io.InputStreamReader(chunked, "UTF-8"))
+      assert(lines.readLine() == "s,o" && lines.readLine() != null)
+      // two commits land while the reader streams version 1: the second
+      // moves the head cache off the reader's view and retires it
+      Seq("new:1", "new:2").foreach { s =>
+        assert(post(srv.address + "/sparql/update", s"""INSERT DATA { $s pad "fresh" }""",
+          "application/sparql-update").statusCode() == 204)
+      }
+      assert(send(req(srv.address + "/status").GET()).body().startsWith("running: 1"),
+        "the reader finished before the commits landed")
+      // the reader still gets its own version's full answer
+      var read = 2L
+      var fresh = false
+      var line = lines.readLine()
+      while (line != null) {
+        read += 1; fresh ||= line.contains("new:"); line = lines.readLine()
+      }
+      assert(read == n + 1 && !fresh, s"read $read rows")
+      sock.close()
+      def count() = graft.sparql.RemoteService.parseJsonResults(spark,
+        post(srv.address + "/sparql", "SELECT (COUNT(*) AS ?n) WHERE { ?s pad ?o }",
+          "application/sparql-query").body()).collect().head.get(0).toString.toLong
+      assert(count() == n + 2)
+      // every request has finished: block storage holds the head
+      // version's merge view and no superseded one
+      def views() = sc.getRDDStorageInfo
+        .filter(i => i.numCachedPartitions > 0 && !before(i.id))
+        .flatMap(i => sc.getPersistentRDDs.get(i.id)).map(_.count()).filter(_ >= n).toSeq
+      val deadline = System.currentTimeMillis() + 20000
+      while (views() != Seq(n + 2) && System.currentTimeMillis() < deadline) Thread.sleep(200)
+      assert(views() == Seq(n + 2))
+    } finally { saved.foreach { case (k, v) => spark.conf.set(k, v) }; srv.stop() }
+  }
 }
